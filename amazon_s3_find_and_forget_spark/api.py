@@ -65,6 +65,38 @@ def sanitize_event_data(data, match_ids: list):
     return data
 
 
+def _strings(data):
+    """Every string ``sanitize_event_data`` would rewrite in ``data``."""
+    if isinstance(data, dict):
+        data = list(data.values())
+    if isinstance(data, list):
+        for v in data:
+            yield from _strings(v)
+    elif isinstance(data, str):
+        yield data
+
+
+_REDACTED_CHARS = frozenset(REDACTED)
+
+
+def relevant_match_ids(data, match_ids: list) -> list:
+    """The match ids that can change a string of ``data``, in order.
+
+    ``sanitize_message`` replaces ids one after another, so an id acts only
+    where it occurs in the original string or where an earlier
+    replacement created it — and such a new occurrence overlaps a
+    ``REDACTED`` marker, so the id shares a character with it. Dropping
+    every other id leaves the output unchanged and spares a job's
+    O(events x ids) replaces.
+    """
+    haystack = "\0".join(_strings(data))
+    return [
+        m
+        for m in match_ids
+        if not _REDACTED_CHARS.isdisjoint(s := str(m)) or s in haystack
+    ]
+
+
 class AlreadyRunningError(RuntimeError):
     """Parity: 'There is already a job in progress' (queue/handlers.py:123-124)."""
 
@@ -525,11 +557,14 @@ class Engine:
                     if d.startswith("DataMapperId=")
                 )
             # match ids must never surface in persisted errors (F9)
+            match_ids = relevant_match_ids(
+                [ev["EventData"] for ev in result.events], all_match_ids
+            )
             events = [
                 {
                     **ev,
                     "EventData": sanitize_event_data(
-                        ev["EventData"], all_match_ids
+                        ev["EventData"], match_ids
                     ),
                 }
                 for ev in result.events

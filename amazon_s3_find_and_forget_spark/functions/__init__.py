@@ -14,7 +14,7 @@ that thinness is the point of the Spark-first design.
 | F6 | typed decimal parse | schema-driven Arrow cast (parquet_handler.py:109-130) |
 | F8 | ``parse_file_url`` | path/URI normalization (boto_utils.py:208-211) |
 | F9 | ``sanitize_message`` | match-id redaction (events.py:50-69) |
-| F10 | manifest stringification | ``build_manifest_df`` (generate_queries.py:114-127) |
+| F10 | manifest stringification | ``matches.manifest_rows`` (generate_queries.py:114-127) |
 """
 
 from __future__ import annotations

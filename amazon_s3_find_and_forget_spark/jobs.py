@@ -269,15 +269,24 @@ def run_job(
                 # generate_queries.py:223-225 + templates/manifests.yaml)
                 from .matches import (
                     build_manifest_df,
+                    manifest_rows,
                     register_manifest_table,
                     write_manifest,
                 )
 
+                # built even without a table to register: perfbench's
+                # traced run reads each job's manifest shape off this call
                 mdf = build_manifest_df(
                     spark, job_id, mapper.mapper_id, mapper.columns, routed
                 )
                 if manifest_dir:
-                    write_manifest(mdf, manifest_dir)
+                    # from the driver: no Spark job for a few rows
+                    write_manifest(
+                        manifest_rows(
+                            job_id, mapper.mapper_id, mapper.columns, routed
+                        ),
+                        manifest_dir,
+                    )
                 if manifest_table:
                     # catalog registration (generate_queries.py:288-326)
                     register_manifest_table(mdf, manifest_table)

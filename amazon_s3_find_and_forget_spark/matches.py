@@ -6,7 +6,8 @@ column-group token (reference: backend/lambdas/tasks/generate_queries.py:89-221)
 On Spark we keep the typed representation all the way through: a
 ``ColumnGroup`` holds typed match values per identifier column group and
 compiles directly into join/filter predicates; the stringified manifest is
-produced only as the auditable artifact (``build_manifest_df``).
+produced only as the auditable artifact (``manifest_rows``, written from the
+driver by ``write_manifest``).
 
 Semantics (parity):
 - a *Simple* match applies to EVERY identifier column of the mapper
@@ -20,6 +21,8 @@ Semantics (parity):
 
 from __future__ import annotations
 
+import json
+import os
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -189,18 +192,17 @@ MANIFEST_SCHEMA = StructType(
 )
 
 
-def build_manifest_df(
-    spark: SparkSession,
+def manifest_rows(
     job_id: str,
     mapper_id: str,
     identifier_columns: list[str],
     items: list[QueueItem],
-) -> DataFrame:
+) -> list[tuple]:
     """The auditable stringified manifest (reference generate_queries.py:89-127).
 
-    One row per (match x column-group); written with
-    ``.write.partitionBy("JobId","DataMapperId")`` it reproduces the
-    reference's partitioned JSONL manifest table (templates/manifests.yaml:59-88).
+    One row per (match x column-group), aligned with ``MANIFEST_SCHEMA``.
+    ``build_manifest_df`` and ``write_manifest`` both take their rows from
+    here, so the registered table and the written files cannot drift.
     """
     rows = []
     for item in items:
@@ -237,11 +239,70 @@ def build_manifest_df(
                     mapper_id,
                 )
             )
-    return spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    return rows
 
 
-def write_manifest(df: DataFrame, path: str) -> None:
-    df.write.mode("append").partitionBy("JobId", "DataMapperId").json(path)
+def build_manifest_df(
+    spark: SparkSession,
+    job_id: str,
+    mapper_id: str,
+    identifier_columns: list[str],
+    items: list[QueueItem],
+) -> DataFrame:
+    """``manifest_rows`` as a DataFrame, for catalog registration
+    (``register_manifest_table``) and ad-hoc queries."""
+    return spark.createDataFrame(
+        manifest_rows(job_id, mapper_id, identifier_columns, items),
+        MANIFEST_SCHEMA,
+    )
+
+
+# Characters Spark's ExternalCatalogUtils.escapePathName writes as %XX in a
+# partition directory name (its non-Windows set).
+_PATH_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^")
+)
+_DATA_FIELDS = [f.name for f in MANIFEST_SCHEMA.fields[:6]]
+
+
+def _partition_dir(column: str, value: str) -> str:
+    if not value:
+        return f"{column}=__HIVE_DEFAULT_PARTITION__"
+    return column + "=" + "".join(
+        f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value
+    )
+
+
+def write_manifest(rows: list[tuple], path: str) -> None:
+    """Write manifest rows from the driver as one JSON Lines object per
+    (JobId, DataMapperId): ``path/JobId=<id>/DataMapperId=<mid>/part-….json``,
+    the layout and encoding of Spark's ``partitionBy`` JSON writer, so
+    ``spark.read.json(path)`` reads back ``MANIFEST_SCHEMA``'s rows.
+
+    A manifest is a few to a few thousand rows — one ``put_object`` from
+    the driver in the reference (generate_queries.py:223-225) — so no
+    Spark job is launched for it. Each object is written under a
+    dot-prefixed name (hidden from Spark's file listing) and renamed into
+    place, so readers never see a partial object.
+    """
+    parts: dict = {}
+    for row in rows:
+        parts.setdefault((row[6], row[7]), []).append(row)
+    encode = json.JSONEncoder(ensure_ascii=False, separators=(",", ":")).encode
+    for (job_id, mapper_id), part in parts.items():
+        d = os.path.join(
+            path,
+            _partition_dir("JobId", job_id),
+            _partition_dir("DataMapperId", mapper_id),
+        )
+        os.makedirs(d, exist_ok=True)
+        name = f"part-00000-{uuid.uuid4()}.c000.json"
+        tmp = os.path.join(d, "." + name)
+        with open(tmp, "w", encoding="utf-8") as f:
+            f.writelines(
+                encode(dict(zip(_DATA_FIELDS, row))) + "\n" for row in part
+            )
+        os.replace(tmp, os.path.join(d, name))
 
 
 def register_manifest_table(

@@ -65,8 +65,11 @@ def null_safe_predicate(group: ColumnGroup) -> Column:
 
 
 def matches_df(spark: SparkSession, group: ColumnGroup) -> DataFrame:
-    """A typed in-memory relation of the group's match values (the Spark
-    analog of one manifest partition, kept typed instead of stringified)."""
+    """A typed in-memory relation of the group's distinct match values
+    (the Spark analog of one manifest partition, kept typed instead of
+    stringified). Values are deduplicated here on the driver: a
+    ``dropDuplicates`` would plan a shuffle for a relation that is
+    broadcast whole anyway."""
     fields = [
         StructField(f"_m{i}", dtype, False)
         for i, dtype in enumerate(group.types)
@@ -76,13 +79,13 @@ def matches_df(spark: SparkSession, group: ColumnGroup) -> DataFrame:
         if group.composite
         else [(v,) for v in group.values]
     )
-    return spark.createDataFrame(rows, StructType(fields))
+    return spark.createDataFrame(list(dict.fromkeys(rows)), StructType(fields))
 
 
 def _semi_join_branch(
     df: DataFrame, group: ColumnGroup, projection: list[Column]
 ) -> DataFrame:
-    m = matches_df(df.sparkSession, group).dropDuplicates()
+    m = matches_df(df.sparkSession, group)
     t = df.alias("t")
     cond = reduce(
         and_,

@@ -8,6 +8,11 @@ down for local testing:
 - Arrow on: every pandas_udf / mapInPandas boundary is Arrow-batched.
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden (or left to AQE's coalescing with a high initial value).
+- lake listing sized to cores too: a table with more partition
+  directories than the discovery threshold (32) is listed by a Spark
+  job of at most ``cpus`` tasks instead of one task per directory
+  (83 tasks for an 83-month lake). Listing still runs distributed, so
+  large lakes keep their parallel listing.
 """
 
 from __future__ import annotations
@@ -59,6 +64,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+            str(cpus),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

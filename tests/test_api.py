@@ -5,6 +5,8 @@ import os
 import shutil
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from amazon_s3_find_and_forget_spark.api import (
     AlreadyRunningError,
@@ -571,3 +573,66 @@ def test_engine_compact_index_facade(engine, spark, tmp_path):
     assert stats["BasePath"].endswith("batch_id=-2")
     assert stats["BaseRows"] == 2
     assert sorted(os.listdir(index_dir)) == ["batch_id=-2"]
+
+
+def _sanitize_every_id(data, match_ids):
+    """Event sanitizing before the prefilter: every id over every string."""
+    if isinstance(data, dict):
+        return {k: _sanitize_every_id(v, match_ids) for k, v in data.items()}
+    if isinstance(data, list):
+        return [_sanitize_every_id(v, match_ids) for v in data]
+    if isinstance(data, str):
+        for m in match_ids:
+            data = data.replace(str(m), "*** MATCH ID ***")
+    return data
+
+
+_text = st.text(alphabet="0123456789/=_-.pIDMATCH* x", max_size=24)
+_event_data = st.recursive(
+    st.one_of(_text, st.integers(0, 200)),
+    lambda kids: st.one_of(
+        st.lists(kids, max_size=3),
+        st.dictionaries(st.sampled_from(["Object", "Error", "Attempt"]),
+                        kids, max_size=3),
+    ),
+    max_leaves=8,
+)
+_match_ids = st.lists(
+    st.one_of(
+        st.integers(0, 200),
+        st.text(alphabet="0123456789IDMATCH* x/", min_size=1, max_size=4),
+    ),
+    max_size=6,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_event_data, max_size=5), _match_ids)
+@example(  # overlapping ids, in both orders
+    [{"Object": "lake/dt=2024-01-05/part-123.parquet"}], [12, 123, 12])
+@example([{"Error": "failed matching 123 then 12"}], [123, 12])
+@example(  # ids inside the marker, applied after a replacement made one
+    [{"Error": "failed for id 7", "Attempt": 1}], [7, "ID", "H I", "**"])
+@example(  # numeric ids inside object paths
+    [{"Object": "lake/ship_ym=1992-01/part-00001.parquet"},
+     {"Objects": ["x/1/2", 1]}], [1, 1992, "01", 2])
+def test_relevant_match_ids_leave_sanitizing_unchanged(events, match_ids):
+    from amazon_s3_find_and_forget_spark.api import (
+        relevant_match_ids,
+        sanitize_event_data,
+    )
+
+    kept = relevant_match_ids(events, match_ids)
+    assert [sanitize_event_data(d, kept) for d in events] == [
+        _sanitize_every_id(d, match_ids) for d in events
+    ]
+
+
+def test_relevant_match_ids_drop_ids_no_string_can_contain():
+    from amazon_s3_find_and_forget_spark.api import relevant_match_ids
+
+    events = [{"Object": "lake/part-17.parquet", "Attempt": 99}]
+    # 99 is only a number and 4 occurs nowhere; "ID" and "x*" could
+    # appear once a replacement inserts the marker
+    assert relevant_match_ids(events, [17, 99, 4, "ID", "x*"]) == [
+        17, "ID", "x*"]

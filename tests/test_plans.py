@@ -480,3 +480,51 @@ def test_pca_projection_plan_is_map_only(spark, sf_dir):
     plan = explain_str(similarity.project_embeddings(emb, model), "simple")
     assert "Exchange" not in plan
     assert "Join" not in plan
+
+
+def _exchanges(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(
+        1 for line in plan.splitlines()
+        if "Exchange" in line and "ReusedExchange" not in line
+    )
+
+
+def test_find_semi_join_dedups_matches_on_the_driver(spark, lake):
+    """Above PREDICATE_VALUE_LIMIT the match relation is deduplicated on
+    the driver: the plan keeps the broadcast and the file-path distinct,
+    but no longer shuffles the match relation for a dropDuplicates, and
+    duplicate match values find the same files."""
+    from amazon_s3_find_and_forget_spark.matches import ColumnGroup
+    from amazon_s3_find_and_forget_spark.plans.find import (
+        PATH_COL,
+        PREDICATE_VALUE_LIMIT,
+        matches_df,
+    )
+
+    df = spark.read.parquet(lake)
+    items = [QueueItem(match_id=k) for k in range(PREDICATE_VALUE_LIMIT + 50)]
+    (group,) = build_column_groups(df.schema, ["l_orderkey"], items)
+    found = find_affected_files(df, [group])
+    assert "LeftSemi" in explain_str(found)
+
+    m = matches_df(spark, group).dropDuplicates().alias("m")
+    deduped_on_cluster = (
+        df.alias("t")
+        .join(F.broadcast(m), F.col("t.l_orderkey") == F.col("m._m0"),
+              "left_semi")
+        .select(F.input_file_name().alias(PATH_COL))
+        .distinct()
+    )
+    assert _exchanges(found) == _exchanges(deduped_on_cluster) - 1 == 2
+
+    dup = ColumnGroup(group.columns, group.types, group.values * 3,
+                      composite=False)
+    files = {r[0] for r in found.collect()}
+    assert files
+    assert {r[0] for r in find_affected_files(df, [dup]).collect()} == files
+    # the predicate path over the same values agrees
+    assert {
+        r[0] for r in find_affected_files(
+            df, [group], predicate_value_limit=10 ** 6).collect()
+    } == files
