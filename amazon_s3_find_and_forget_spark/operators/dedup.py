@@ -308,7 +308,7 @@ def minhash_signatures_sql(
     vs byte-level in the numpy kernel, so the two paths are
     interchangeable as an LSH family but NOT row-for-row identical.
 
-    Trade (measured in ``tools/ab_minhash.py``, ``AB_MODE=kernel``):
+    Trade (SCALE.md, Dedup, "Signature kernel A/B (round 8)"):
     higher-order-function lambdas evaluate interpreted (outside
     whole-stage codegen), so each shingle costs an interpreted
     multiply-min per permutation; the numpy kernel does the same
@@ -410,7 +410,7 @@ def optimal_bands(num_perm: int, threshold: float) -> int:
     verify-rejected, ~55 % of the whole survivors query — and
     t*-matched banding is 2.3x faster end-to-end with measured
     recall/precision 1.0 on the exact-Jaccard baseline
-    (tools/ab_minhash_presets.py). Raise num_perm (sharper estimator
+    (SCALE.md, Dedup). Raise num_perm (sharper estimator
     AND sharper banding) when boundary pairs matter; every
     threshold-bearing entry point defaults ``bands=None`` -> this, and
     an explicit ``bands`` pins a layout (band keys derive at call time,

@@ -171,6 +171,8 @@ def compact_small_files(
     import glob as glob_mod
     import os
 
+    from ..sources.object_store import remove_crc_sidecar
+
     if fmt != "parquet":
         raise ValueError("compaction supports parquet lakes")
     files = sorted(
@@ -316,14 +318,8 @@ def compact_small_files(
             os.replace(_staged_name(paths), paths[0])
             for p in paths[1:]:
                 os.remove(p)
-            # drop Hadoop ChecksumFileSystem sidecars: a stale .crc for
-            # a replaced/removed parquet fails subsequent Spark reads
             for p in paths:
-                crc = os.path.join(
-                    os.path.dirname(p), f".{os.path.basename(p)}.crc"
-                )
-                if os.path.exists(crc):
-                    os.remove(crc)
+                remove_crc_sidecar(p)
     else:
         done = 0
     # the pass mutates the directory in place — invalidate any cached

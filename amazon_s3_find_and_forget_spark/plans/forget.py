@@ -9,8 +9,11 @@ Two physical strategies, chosen by the caller:
 
 2. ``forget_files`` — the reference's surgical one-in-one-out rewrite
    (backend/ecs_tasks/delete_files/main.py:132-265): only the files the
-   Find phase flagged are touched; each is rewritten in place (temp file
-   + atomic rename), schema preserved, and the job fails the object if
+   Find phase flagged are touched; each is read, rewritten in memory
+   with its schema preserved, and committed through one ``ObjectStore``
+   protocol whatever the lake (``LocalObjectStore`` for local paths,
+   ``S3ObjectStore`` for ``s3://``): property replay, integrity check,
+   rollback on conflict, old-version purge. The job fails the object if
    zero rows were deleted (Find/Forget consistency check, main.py:182-187).
    Files are distributed one-per-task via ``mapInPandas`` over a paths
    DataFrame — the Spark scheduler replaces the reference's SQS + Fargate
@@ -24,7 +27,6 @@ must KEEP null rows — ``forget_table`` wraps predicates in
 from __future__ import annotations
 
 import os
-import uuid
 from functools import reduce
 from operator import or_
 
@@ -124,6 +126,41 @@ def _looks_not_found(e: Exception) -> bool:
     return code in ("NoSuchKey", "NoSuchVersion", "NotFound", "404")
 
 
+def _rewrite_bytes(
+    data: bytes,
+    path: str,
+    fmt: str,
+    spec: list[dict],
+    redact_columns: list[str] | None,
+) -> tuple[dict, bytes]:
+    """Run the file kernel over an object's plaintext; returns its stats
+    and the rewritten bytes. Parquet goes buffer to buffer; the JSON
+    kernel picks gzip by file name, so it runs on a temp-file pair."""
+    if fmt == "parquet":
+        import pyarrow as pa
+
+        from ..sources.parquet_file import rewrite_parquet_file
+
+        sink = pa.BufferOutputStream()
+        stats = rewrite_parquet_file(
+            pa.BufferReader(data), sink, spec, redact_columns
+        )
+        return stats, sink.getvalue().to_pybytes()
+    import tempfile
+
+    from ..sources.jsonl_file import rewrite_json_file
+
+    suffix = ".gz" if path.endswith(".gz") else ""
+    with tempfile.TemporaryDirectory(prefix="s3f2-json-") as workdir:
+        rp = os.path.join(workdir, "in" + suffix)
+        wp = os.path.join(workdir, "out" + suffix)
+        with open(rp, "wb") as f:
+            f.write(data)
+        stats = rewrite_json_file(rp, wp, spec, redact_columns)
+        with open(wp, "rb") as f:
+            return stats, f.read()
+
+
 def _rewrite_one_store(
     path: str,
     fmt: str,
@@ -135,30 +172,21 @@ def _rewrite_one_store(
     store_factory=None,
     redact_columns: list[str] | None = None,
 ):
-    """Object-store rewrite: the reference's S3 commit protocol end to end
+    """The reference's per-object commit protocol end to end
     (main.py:132-265; s3.py:61-98 properties replay, :301-341 integrity,
     :344-357 rollback, :244-281 version purge) through the ObjectStore
-    seam instead of the posix fast path.
+    seam — the one commit path for every lake, local or ``s3://``.
 
     Runs INSIDE the executor task: the store client is built here from
     the mapper's picklable ``role_arn`` string — per-task
     ``get_session(body["RoleArn"])`` parity (main.py:140,154) — so a
     cross-account mapper's credentials never ship from the driver.
     """
-    import shutil
-    import tempfile
-
     from ..sources import cse
     from ..sources import object_store as ostore
-    from ..sources.jsonl_file import rewrite_json_file
-    from ..sources.parquet_file import rewrite_parquet_file
 
     try:
-        store = (
-            store_factory(role_arn or None)
-            if store_factory is not None
-            else ostore.store_for_mapper(role_arn or None)
-        )
+        store = (store_factory or ostore.store_for_mapper)(role_arn or None)
         try:
             # the version must be captured WITH (or before) the read —
             # a listing taken after get_object would absorb a concurrent
@@ -172,44 +200,36 @@ def _rewrite_one_store(
                 from_version = chain[-1] if chain else "null"
                 data = store.get_object(path)
         except Exception as e:  # noqa: BLE001
-            if ignore_not_found and _looks_not_found(e):
-                return (path, fmt, 0, 0, "skipped", "ObjectNotFound")
+            if _looks_not_found(e):
+                status = "skipped" if ignore_not_found else "failed"
+                return (path, fmt, 0, 0, status, "ObjectNotFound")
             raise
         props = store.get_properties(path)
         metadata = dict(props.metadata or {})
-        if cse.is_kms_cse_encrypted(metadata):
+        encrypted = cse.is_kms_cse_encrypted(metadata)
+        if encrypted:
+            # decrypt -> rewrite plaintext -> re-encrypt with a FRESH
+            # data key (reference main.py:176-178, 199-201)
             if kms is None:
                 raise ValueError(
                     "Object is CSE-KMS encrypted but no KMS client provided"
                 )
             data = cse.decrypt_bytes(data, metadata, kms)
-        suffix = ".gz" if path.endswith(".gz") else ""
-        workdir = tempfile.mkdtemp(prefix="s3f2-store-")
-        try:
-            rp = os.path.join(workdir, "in" + suffix)
-            wp = os.path.join(workdir, "out" + suffix)
-            with open(rp, "wb") as f:
-                f.write(data)
-            if fmt == "parquet":
-                stats = rewrite_parquet_file(rp, wp, spec, redact_columns)
-            else:
-                stats = rewrite_json_file(rp, wp, spec, redact_columns)
-            if stats["DeletedRows"] == 0:
-                return (
-                    path,
-                    fmt,
-                    stats["ProcessedRows"],
-                    0,
-                    "failed",
-                    "Unprocessable: no rows deleted",
-                )
-            with open(wp, "rb") as f:
-                out_bytes = f.read()
-        finally:
-            shutil.rmtree(workdir, ignore_errors=True)
-        if cse.is_kms_cse_encrypted(metadata):
-            # fresh data key per rewrite; the new envelope rides in the
-            # object metadata replayed by save() (reference cse.py:57-84)
+        stats, out_bytes = _rewrite_bytes(data, path, fmt, spec, redact_columns)
+        if stats["DeletedRows"] == 0:
+            # Find said this object matches but Forget deleted nothing —
+            # fail the object rather than silently no-op (main.py:182-187)
+            return (
+                path,
+                fmt,
+                stats["ProcessedRows"],
+                0,
+                "failed",
+                "Unprocessable: no rows deleted",
+            )
+        if encrypted:
+            # the new envelope rides in the object metadata replayed by
+            # save() (reference cse.py:57-84)
             out_bytes, props.metadata = cse.encrypt_bytes(
                 out_bytes, metadata, kms
             )
@@ -253,6 +273,12 @@ def _rewrite_one_store(
         return (path, fmt, 0, 0, "failed", f"{type(e).__name__}: {e}")
 
 
+def _local_store(_role_arn):
+    from ..sources.object_store import LocalObjectStore
+
+    return LocalObjectStore()
+
+
 def _rewrite_one(
     path: str,
     fmt: str,
@@ -264,131 +290,28 @@ def _rewrite_one(
     store_factory=None,
     redact_columns: list[str] | None = None,
 ):
-    from ..sources import cse, versions
-    from ..sources.jsonl_file import rewrite_json_file
-    from ..sources.parquet_file import rewrite_parquet_file
+    """Pick the object's store and run the commit protocol on it: the
+    injected ``store_factory`` if any, S3 (with the mapper's RoleArn)
+    for ``s3://`` paths, the local filesystem otherwise.
 
-    if store_factory is not None or path.startswith("s3://"):
-        # non-posix lake (or injected backend): the ObjectStore protocol
-        # carries the commit; RoleArn takes runtime effect here. Spark's
-        # $path column names local objects as file:// URIs — a local
-        # backend needs the posix path, while events keep the URI.
-        store_path = (
-            path[len("file:") :] if path.startswith("file:") else path
-        )
-        row = _rewrite_one_store(
-            store_path,
-            fmt,
-            spec,
-            ignore_not_found,
-            delete_old_versions,
-            kms,
-            role_arn,
-            store_factory,
-            redact_columns,
-        )
-        return (path,) + tuple(row[1:])
-    local = path[len("file:") :] if path.startswith("file:") else path
-    if not os.path.exists(local):
-        status = "skipped" if ignore_not_found else "failed"
-        return (path, fmt, 0, 0, status, "ObjectNotFound")
-    suffix = ".gz" if local.endswith(".gz") else ""
-    tmp = os.path.join(
-        os.path.dirname(local), f".s3f2tmp-{uuid.uuid4().hex}{suffix}"
+    Spark's $path column names local objects as file:// URIs — the
+    store gets the posix path, while the stats row keeps the URI.
+    """
+    if store_factory is None and not path.startswith("s3://"):
+        store_factory = _local_store
+    store_path = path[len("file:") :] if path.startswith("file:") else path
+    row = _rewrite_one_store(
+        store_path,
+        fmt,
+        spec,
+        ignore_not_found,
+        delete_old_versions,
+        kms,
+        role_arn,
+        store_factory,
+        redact_columns,
     )
-    plain_in = plain_out = None
-    try:
-        # source "VersionId": any concurrent write between here and commit
-        # fails the object instead of silently clobbering it (the local
-        # analog of s3.py:301-341's version-integrity check)
-        source = versions.snapshot(local)
-        metadata = cse.load_metadata(local)
-        encrypted = cse.is_kms_cse_encrypted(metadata)
-        if encrypted:
-            # decrypt -> rewrite plaintext -> re-encrypt with a FRESH data
-            # key (reference main.py:176-178, 199-201 around the handler)
-            if kms is None:
-                raise ValueError(
-                    "Object is CSE-KMS encrypted but no KMS client provided"
-                )
-            plain_in = tmp + ".plain-in"
-            plain_out = tmp + ".plain-out"
-            cse.decrypt_file(local, plain_in, kms)
-            read_path, write_path = plain_in, plain_out
-        else:
-            read_path, write_path = local, tmp
-        if fmt == "parquet":
-            stats = rewrite_parquet_file(read_path, write_path, spec,
-                                         redact_columns)
-        else:
-            stats = rewrite_json_file(read_path, write_path, spec,
-                                      redact_columns)
-        if stats["DeletedRows"] == 0:
-            # Find said this object matches but Forget deleted nothing —
-            # fail the object rather than silently no-op (main.py:182-187).
-            if os.path.exists(tmp):
-                os.remove(tmp)
-            return (
-                path,
-                fmt,
-                stats["ProcessedRows"],
-                0,
-                "failed",
-                "Unprocessable: no rows deleted",
-            )
-        companions = None
-        if encrypted:
-            with open(plain_out, "rb") as f:
-                ciphertext, new_md = cse.encrypt_bytes(f.read(), metadata, kms)
-            with open(tmp, "wb") as f:
-                f.write(ciphertext)
-            # the fresh-data-key envelope commits WITH the ciphertext (the
-            # S3 analog PUTs object+metadata atomically): the new sidecar
-            # bytes are durable before the content swap, the old sidecar is
-            # archived beside the old ciphertext so restore_version yields
-            # a decryptable (content, envelope) pair
-            import json as _json
-
-            side_tmp = tmp + ".metatmp"
-            with open(side_tmp, "w") as f:
-                _json.dump(new_md, f)
-            companions = {cse.metadata_path(local): side_tmp}
-        versions.commit(
-            local,
-            tmp,
-            source,
-            delete_old=delete_old_versions,
-            companions=companions,
-        )
-        # Hadoop's local FS keeps ".<name>.crc" sidecars; the rewritten
-        # bytes invalidate them (irrelevant on S3 where there is none).
-        crc = os.path.join(
-            os.path.dirname(local), "." + os.path.basename(local) + ".crc"
-        )
-        if os.path.exists(crc):
-            os.remove(crc)
-        return (
-            path,
-            fmt,
-            stats["ProcessedRows"],
-            stats["DeletedRows"],
-            "updated",
-            None,
-        )
-    except Exception as e:  # noqa: BLE001 — per-object error isolation
-        try:
-            for leftover in (tmp, tmp + ".metatmp"):
-                if os.path.exists(leftover):
-                    os.remove(leftover)
-        except OSError as re:
-            # the "rollback" (discarding the uncommitted rewrite) failed —
-            # surface it as its own status (main.py:248-262 analog)
-            return (path, fmt, 0, 0, "rollback_failed", f"{type(re).__name__}: {re}")
-        return (path, fmt, 0, 0, "failed", f"{type(e).__name__}: {e}")
-    finally:
-        for p in (plain_in, plain_out):
-            if p and os.path.exists(p):
-                os.remove(p)
+    return (path,) + tuple(row[1:])
 
 
 def forget_files(

@@ -11,17 +11,19 @@ and purge prior versions on success (s3.py:244-281).
 This module is the SEAM between that protocol and its backends:
 
 - ``ObjectStore`` — the interface, one method per reference behavior;
-- ``LocalObjectStore`` — the filesystem backend the engine tests run on:
-  versioning via ``sources.versions`` and object properties in a JSON
-  sidecar (the filesystem has no native metadata to replay);
+- ``LocalObjectStore`` — the filesystem backend and the engine's commit
+  path for every local lake: versioning via ``sources.versions``, object
+  properties in sidecars only when set (the filesystem has no native
+  metadata to replay), mode bits carried over, Hadoop ``.crc`` dropped;
 - ``S3ObjectStore`` — the boto3-shaped backend. boto3 is not installed
   in this environment, so construction is lazy-import-guarded; the
   method bodies map 1:1 onto the reference's client calls so pointing
   the engine at real S3 is a constructor swap, not a rewrite.
 
 The Spark forget plan itself never touches this module's hot path —
-object rewriting is per-file inside ``mapInPandas`` tasks; the store is
-the commit/safety layer around each file.
+object rewriting is per-file inside executor tasks
+(``plans.forget._rewrite_one_store``); the store is the commit/safety
+layer around each file, the same protocol for every backend.
 """
 
 from __future__ import annotations
@@ -29,13 +31,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import tempfile
+import stat
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Protocol
 
-from . import versions
+from . import cse, versions
 
 
 class TransientStoreError(RuntimeError):
@@ -170,105 +172,167 @@ class ObjectStore(Protocol):
 # --------------------------------------------------------------------------
 
 
-class LocalObjectStore:
-    """Filesystem backend: explicit version files + JSON property sidecar.
+def remove_crc_sidecar(path: str) -> None:
+    """Drop Hadoop's ``.<name>.crc`` checksum sidecar of a replaced or
+    removed object: Spark's local filesystem verifies reads against it,
+    so a stale one fails every later read of the new bytes."""
+    head, name = os.path.split(path)
+    try:
+        os.remove(os.path.join(head, f".{name}.crc"))
+    except FileNotFoundError:
+        pass
 
-    Unlike S3, a filesystem write is atomic (``os.replace``) and the
-    integrity check runs BEFORE the swap (``versions.commit`` re-stats
-    the object under the snapshot) — strictly stronger than the
-    reference's after-the-fact version-chain verification. The
-    ``verify_version_integrity`` method is still provided with the
-    reference's chain semantics so callers written against the S3
-    protocol behave identically here.
+
+def _dot_temp(path: str) -> str:
+    """A hidden temp name beside ``path`` (readers skip dot files)."""
+    return os.path.join(
+        os.path.dirname(path), f".s3f2tmp-{uuid.uuid4().hex}"
+    )
+
+
+def _version_id(mtime_ns: int, size: int, data) -> str:
+    # mtime+size alone can collide across distinct contents on
+    # coarse-timestamp filesystems (or clock-preserving copies), and an
+    # archive id already taken is never overwritten — a short content
+    # digest makes the id collision-safe
+    digest = hashlib.sha256(data).hexdigest()[:12]
+    return f"{mtime_ns:020d}-{size}-{digest}"
+
+
+def _identity(st: os.stat_result) -> tuple:
+    """What names one unchanged file: a replace swaps the inode, a
+    write moves mtime (and size)."""
+    return (st.st_dev, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+class LocalObjectStore:
+    """Filesystem backend and the engine's commit path for every local
+    lake — the one module that knows an object's on-disk layout:
+
+    - content replaced by ``os.replace`` of a hidden temp that carries
+      the replaced object's mode bits (the local analog of ACL replay);
+    - ``ObjectProperties.metadata`` in ``<obj>.s3meta.json``, where the
+      CSE reader expects the envelope, other fields in a hidden
+      ``.<obj>.s3f2props``; each written only when set, and committed
+      with the content as ``versions.commit`` companions;
+    - Hadoop's ``.<obj>.crc`` dropped when the content changes;
+    - prior versions under ``.s3f2versions/<obj>/`` (``sources.versions``).
+
+    The integrity check runs BEFORE the atomic replace: ``save`` commits
+    only while the object keeps the snapshot ``get_object_and_version``
+    read it at — stronger than S3's after-the-fact chain check, which
+    ``verify_version_integrity`` still runs. Version ids are
+    ``<mtime_ns>-<size>-<sha256 prefix>``, hashed from bytes in memory.
     """
 
-    _META_SUFFIX = ".s3f2meta"
+    def __init__(self):
+        # path -> (snapshot, version id) of the read the next save of
+        # that path replaces
+        self._reads: dict[str, tuple] = {}
+        # path -> (identity, version id) of this store's last save, so
+        # the chain check after it does not hash those bytes again
+        self._writes: dict[str, tuple] = {}
 
     def get_object(self, path: str) -> bytes:
         with open(path, "rb") as f:
             return f.read()
 
     def get_object_and_version(self, path: str) -> tuple[bytes, str]:
-        """Read content plus the version it represents. The version is
-        captured BEFORE the read: if a writer lands in between, the
-        stale version makes the commit's integrity check fail loudly
-        instead of silently clobbering the concurrent write."""
-        version = self.current_version(path)
-        return self.get_object(path), version
+        """Read content plus the version it represents. The snapshot is
+        taken BEFORE the read: if a writer lands in between, the commit
+        sees a changed snapshot and fails loudly instead of silently
+        clobbering the concurrent write."""
+        snap = versions.snapshot(path)
+        data = self.get_object(path)
+        version = _version_id(*snap, data)
+        self._reads[path] = (snap, version)
+        return data, version
+
+    @staticmethod
+    def _props_path(path: str) -> str:
+        head, name = os.path.split(path)
+        return os.path.join(head, f".{name}.s3f2props")
 
     def get_properties(self, path: str) -> ObjectProperties:
-        meta = path + self._META_SUFFIX
-        if os.path.exists(meta):
-            with open(meta, "r", encoding="utf-8") as f:
-                return ObjectProperties.from_json(f.read())
-        return ObjectProperties()
+        fields = {}
+        side = self._props_path(path)
+        if os.path.exists(side):
+            with open(side, encoding="utf-8") as f:
+                fields = json.load(f)
+        return ObjectProperties(metadata=cse.load_metadata(path), **fields)
+
+    def _write_sidecars(
+        self, path: str, properties: ObjectProperties, temps: list[str]
+    ) -> dict[str, str | None]:
+        """Stage the sidecars of ``properties``: target -> temp holding
+        the new content, or None to remove a sidecar the new version
+        does not have (``versions.commit`` companions). Every temp is
+        appended to ``temps`` for the caller's cleanup."""
+        fields = json.loads(properties.to_json())
+        metadata = fields.pop("metadata", None)
+        out: dict[str, str | None] = {}
+        for target, payload in (
+            (cse.metadata_path(path), metadata),
+            (self._props_path(path), fields),
+        ):
+            if payload:
+                tmp = _dot_temp(path)
+                temps.append(tmp)
+                with open(tmp, "w", encoding="utf-8") as f:
+                    json.dump(payload, f, sort_keys=True)
+                out[target] = tmp
+            elif os.path.exists(target):
+                out[target] = None
+        return out
 
     def put_properties(self, path: str, properties: ObjectProperties) -> None:
-        with open(path + self._META_SUFFIX, "w", encoding="utf-8") as f:
-            f.write(properties.to_json())
+        for target, tmp in self._write_sidecars(path, properties, []).items():
+            if tmp is None:
+                os.remove(target)
+            else:
+                os.replace(tmp, target)
 
     def save(
         self, path: str, data: bytes, properties: ObjectProperties | None = None
     ) -> str:
         # replay semantics: absent properties -> keep the current ones
         props = properties or self.get_properties(path)
-        snap = versions.snapshot(path)
-        prev_id = self.current_version(path)
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.dirname(path) or ".", prefix=".s3f2put-"
+        snap, prev_id = self._reads.pop(path, None) or (
+            versions.snapshot(path),
+            self.current_version(path),
         )
+        tmp = _dot_temp(path)
+        temps = [tmp]
         try:
-            with os.fdopen(fd, "wb") as f:
+            with open(tmp, "xb") as f:
+                os.fchmod(f.fileno(), stat.S_IMODE(os.stat(path).st_mode))
                 f.write(data)
-            mtmp = tmp + ".meta"
-            with open(mtmp, "w", encoding="utf-8") as f:
-                f.write(props.to_json())
-            archived = versions.commit(
-                path,
-                tmp,
-                snap,
-                delete_old=False,
-                companions={path + self._META_SUFFIX: mtmp},
+            st = os.stat(tmp)  # os.replace keeps the inode's mtime
+            companions = self._write_sidecars(path, props, temps)
+            # before the replace: no crash point leaves a stale checksum
+            # beside new bytes (a missing one only skips verification)
+            remove_crc_sidecar(path)
+            # the archive takes the id its content had while live, so
+            # integrity chains compare like S3's version listings
+            versions.commit(
+                path, tmp, snap, archive_as=prev_id, companions=companions
             )
         except versions.VersionIntegrityError as e:
-            os.unlink(tmp)
             raise VersionConflictError(str(e)) from e
-        # one id scheme end-to-end: rename the archive to the id the
-        # content had WHILE LIVE (current_version form), so integrity
-        # chains compare like S3's version listings
-        if archived is not None:
-            old = versions.version_path(path, archived)
-            store_dir = os.path.dirname(old)
-            target = versions.version_path(path, prev_id)
-            if os.path.exists(target):
-                # the digest in the id guarantees an existing target holds
-                # the SAME bytes — drop the duplicate instead of renaming
-                # over it (never silently clobber a distinct version)
-                os.remove(old)
-            else:
-                os.rename(old, target)
-            for name in os.listdir(store_dir):
-                if name.startswith(f"{archived}~"):
-                    ctarget = os.path.join(
-                        store_dir, f"{prev_id}~{name[len(archived) + 1:]}"
-                    )
-                    if os.path.exists(ctarget):
-                        os.remove(os.path.join(store_dir, name))
-                    else:
-                        os.rename(os.path.join(store_dir, name), ctarget)
-        return self.current_version(path)
+        finally:
+            for t in temps:
+                if os.path.exists(t):
+                    os.remove(t)
+        version = _version_id(st.st_mtime_ns, st.st_size, data)
+        self._writes[path] = (_identity(st), version)
+        return version
 
     def current_version(self, path: str) -> str:
-        # mtime+size alone can collide across distinct contents on
-        # coarse-timestamp filesystems (or clock-preserving copies), which
-        # would let save()'s archive-rename clobber a prior version — a
-        # short content digest makes the id collision-safe
         st = os.stat(path)
-        h = hashlib.sha256()
-        with open(path, "rb") as f:
-            for chunk in iter(lambda: f.read(1 << 20), b""):
-                h.update(chunk)
-        return f"{st.st_mtime_ns:020d}-{st.st_size}-{h.hexdigest()[:12]}"
+        written = self._writes.get(path)
+        if written is not None and written[0] == _identity(st):
+            return written[1]  # still the inode save() wrote and hashed
+        return _version_id(st.st_mtime_ns, st.st_size, self.get_object(path))
 
     def list_versions(self, path: str) -> list[str]:
         return versions.list_versions(path)

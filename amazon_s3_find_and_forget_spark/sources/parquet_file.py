@@ -250,7 +250,9 @@ def rewrite_parquet_file(
     Streams row group by row group (bounded memory — a 1 GB row group
     never materializes the whole file), preserves the input schema with
     metadata stripped, writes snappy. Returns
-    ``{"ProcessedRows": n, "DeletedRows": m}``.
+    ``{"ProcessedRows": n, "DeletedRows": m}``. ``in_path``/``out_path``
+    may also be anything ``pq.ParquetFile``/``pq.ParquetWriter`` accept
+    — the Forget commit passes in-memory Arrow buffers.
 
     With ``redact_columns`` the matching rows are KEPT and the listed
     columns (dot paths allowed) are nulled instead — erasure of the

@@ -15,7 +15,9 @@ The reference relies on S3 bucket versioning as its safety envelope
 
 On a local/HDFS-style filesystem there is no native versioning, so the
 analog keeps explicit version files in a ``.s3f2versions/<name>/`` dir
-beside the object:
+beside the object. These are the primitives under
+``object_store.LocalObjectStore``, the engine's one local commit path
+(the only caller of ``commit``):
 
 - a *snapshot* ``(mtime_ns, size)`` captured before reading stands in for
   the source VersionId;
@@ -23,16 +25,19 @@ beside the object:
   ``os.replace`` commit — a concurrent writer changes the snapshot and
   aborts the commit (strictly stronger than the reference, which can only
   detect the conflict after the overwrite and must roll back);
-- when ``delete_old_versions`` is False the replaced content is hardlinked
-  into the version store first (cheap, no copy), so history is restorable
-  via ``restore_version``; when True (the reference's erase-history flag)
-  any existing versions of the object are purged after commit.
+- the replaced content is hardlinked into the version store first
+  (cheap, no copy), so history is restorable via ``restore_version``
+  until ``purge_versions`` erases it.
+
+Version ids sort lexicographically in time order: the store's are
+``<mtime_ns:020d>-<size>-<digest>``; stores written before it owned
+every local commit also hold 15-digit millisecond ids, which sort
+first (they are older) and restore the same way.
 """
 
 from __future__ import annotations
 
 import os
-import time
 import uuid
 
 
@@ -73,34 +78,31 @@ def version_path(local_path: str, version_id: str) -> str:
     return os.path.join(_store_dir(local_path), version_id)
 
 
-def _new_version_id() -> str:
-    return f"{int(time.time() * 1000):015d}-{uuid.uuid4().hex[:8]}"
-
-
 def commit(
     local_path: str,
     tmp_path: str,
     source_snapshot: tuple[int, int],
-    delete_old: bool = True,
-    companions: dict[str, str] | None = None,
-) -> str | None:
+    archive_as: str | None = None,
+    companions: dict[str, str | None] | None = None,
+) -> None:
     """Atomically replace ``local_path`` with ``tmp_path``.
 
     Verifies the object still matches ``source_snapshot`` (integrity
-    check), then either archives the replaced content as a new version
-    (``delete_old=False``) or purges all history (``delete_old=True``).
-    Returns the archived version id, or None. Raises
-    ``VersionIntegrityError`` on conflict, leaving the object untouched
-    (the caller removes ``tmp_path`` — the "rollback").
+    check); with ``archive_as`` the replaced content is first hardlinked
+    into the version store under that id, restorable via
+    ``restore_version``. Raises ``VersionIntegrityError`` on conflict,
+    leaving the object untouched (the caller removes ``tmp_path`` — the
+    "rollback").
 
-    ``companions`` maps sidecar target path -> tmp path with new content
-    (e.g. the CSE envelope sidecar, whose S3 analog — object metadata —
-    is PUT atomically with the object). Companions are archived into the
-    version store alongside the content (as ``<vid>~<name>``) and
-    replaced back-to-back with it, so a stored version always restores
-    with the sidecar that decrypts it, and the new sidecar bytes are
-    durable on disk BEFORE the content swap (no crash point loses the
-    fresh data key).
+    ``companions`` maps sidecar target path -> tmp path with new content,
+    or None when the new version has no such sidecar (e.g. the CSE
+    envelope sidecar, whose S3 analog — object metadata — is PUT
+    atomically with the object). Existing companions are archived with
+    the content (as ``<id>~<name>``) and replaced (or removed)
+    back-to-back with it, so a stored version always restores with the
+    sidecar that decrypts it, and the new sidecar bytes are durable on
+    disk BEFORE the content swap (no crash point loses the fresh data
+    key).
     """
     if snapshot(local_path) != source_snapshot:
         raise VersionIntegrityError(
@@ -108,24 +110,23 @@ def commit(
             "between read and commit"
         )
     companions = companions or {}
-    archived = None
-    if not delete_old:
+    if archive_as is not None:
         d = _store_dir(local_path)
         os.makedirs(d, exist_ok=True)
-        archived = _new_version_id()
-        os.link(local_path, os.path.join(d, archived))
-        for target in companions:
-            if os.path.exists(target):
-                os.link(
-                    target,
-                    os.path.join(d, f"{archived}~{os.path.basename(target)}"),
-                )
+        for target, name in [(local_path, archive_as)] + [
+            (t, f"{archive_as}~{os.path.basename(t)}") for t in companions
+        ]:
+            # an id already archived names the same bytes (ids carry a
+            # content digest): keep it, never clobber a distinct version
+            archived = os.path.join(d, name)
+            if os.path.exists(target) and not os.path.exists(archived):
+                os.link(target, archived)
     os.replace(tmp_path, local_path)
     for target, new_tmp in companions.items():
-        os.replace(new_tmp, target)
-    if delete_old:
-        purge_versions(local_path)
-    return archived
+        if new_tmp is not None:
+            os.replace(new_tmp, target)
+        elif os.path.exists(target):
+            os.remove(target)
 
 
 def purge_versions(local_path: str) -> int:

@@ -983,7 +983,7 @@ def main():
         # dedup_span_removal joined the watch set in round 17: its r16
         # min-of-2 (30.06/29.99 s) read as a 1.49x calibrated drift,
         # but the same-session standalone A/B at the same HEAD
-        # (tools/adjudicate_span_removal.py, SCALE.md round-17 entry)
+        # (SCALE.md, "Round 17: dedup_span_removal sf10 drift adjudicated")
         # measured [34.5, 24.2, 18.6, 20.0] at probe 0.651 — a JIT
         # warm-up curve whose converged min (28.6 cal-sec) sits INSIDE
         # the r15 floor (30.0 cal-sec). Two samples caught only the

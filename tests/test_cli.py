@@ -99,7 +99,7 @@ def test_vacuum_purges_orphaned_version_stores(spark, tmp_path, capsys):
         import shutil as _sh
 
         _sh.copy(f, tmp)
-        versions.commit(f, tmp, snap, delete_old=False)
+        versions.commit(f, tmp, snap, archive_as="v0")
     assert os.path.isdir(os.path.join(lake, ".s3f2versions"))
 
     out = run(
